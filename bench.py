@@ -28,6 +28,8 @@ from __future__ import annotations
 
 import json
 import os
+import random
+import re
 import statistics
 import sys
 import time
@@ -159,7 +161,31 @@ def _canary(spark) -> float:
     return round(statistics.median(walls), 3)
 
 
+def query_order(spec: str, queries: list[str]) -> tuple[list[str], str | None]:
+    """The run order for ``SPARK_GRAFT_BENCH_ORDER``: ``""`` keeps
+    ``queries`` as listed; ``shuffled`` or ``shuffled:<int>`` permutes them
+    with that seed (0 by default), so an in-loop contamination hypothesis —
+    a heavy codegen neighbor inflating the medians of whoever runs next —
+    is testable.  Returns the order and the spec to record as the
+    summary's ``query_order`` (None when nothing was shuffled).  Any other
+    value raises ValueError instead of silently running unshuffled."""
+    if not spec:
+        return list(queries), None
+    m = re.fullmatch(r"shuffled(?::(-?\d+))?", spec)
+    if m is None:
+        raise ValueError(
+            f"SPARK_GRAFT_BENCH_ORDER must be 'shuffled' or "
+            f"'shuffled:<int>', got {spec!r}"
+        )
+    order = list(queries)
+    random.Random(int(m.group(1) or 0)).shuffle(order)
+    return order, spec
+
+
 def main() -> None:
+    bench_queries, order_applied = query_order(
+        os.environ.get("SPARK_GRAFT_BENCH_ORDER", ""), BENCH_QUERIES
+    )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     quiet_mode = "--quiet" in sys.argv or os.environ.get(
         "SPARK_GRAFT_CANARY"
@@ -174,20 +200,6 @@ def main() -> None:
     canary_before = _canary(spark) if quiet_mode else None
 
     n_runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
-    # ADJUDICATION KNOB (r15, additive — default off, behavior unchanged):
-    # SPARK_GRAFT_BENCH_ORDER=shuffled[:seed] permutes the query order so
-    # an in-loop contamination hypothesis (a heavy codegen neighbor
-    # inflating the medians of whoever runs next) is testable — if the
-    # medians move with the order, the loop is contaminated; if they
-    # stand, they are real.  The permutation is seeded and recorded in
-    # the summary so runs are reproducible.
-    bench_queries = list(BENCH_QUERIES)
-    order_spec = os.environ.get("SPARK_GRAFT_BENCH_ORDER", "")
-    if order_spec.startswith("shuffled"):
-        import random
-
-        seed = int(order_spec.split(":", 1)[1]) if ":" in order_spec else 0
-        random.Random(seed).shuffle(bench_queries)
     timings: dict[str, float] = {}
     raw: dict[str, list[float]] = {}
     for name in bench_queries:
@@ -218,8 +230,8 @@ def main() -> None:
         "protocol": "cold (session memos cleared before each run)",
         "raw_runs_file": "BENCH_RAW_LATEST.json",
     }
-    if order_spec:
-        summary["query_order"] = order_spec
+    if order_applied is not None:
+        summary["query_order"] = order_applied
     respikes: dict[str, dict] = {}
     # per-query spike certification (r12 verdict #3, extended to EVERY
     # bench path r14 — verdict #4: the driver's official BENCH_r13

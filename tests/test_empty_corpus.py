@@ -39,6 +39,8 @@ _OPS_EMPTY = [
     "similarity_topk_ivfpq_rerank", "xml_udtf_lineitem_array",
     # round-14 addition
     "dedup_semantic_prune_kmeans",
+    # the k-center pair: an empty probe on the driver route
+    "sample_kcenter_coreset", "dedup_semantic_prune",
 ]
 
 

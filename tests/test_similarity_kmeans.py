@@ -448,33 +448,38 @@ def test_kcenter_greedy_invariants(spark, oracle_sf_dir):
 
 
 def test_kcenter_materialize_cut_invariant(spark, oracle_sf_dir, monkeypatch):
-    """The r13 lineage cut (materialize ``cur`` every _KC_MAT_EVERY
-    selections) must be INVISIBLE in the output: the selection sequence
-    with cuts every 3 iterations equals the sequence with no cuts at
-    all (m > k), and the superseded scratch snapshots are gone when the
-    operator returns (one-deep scratch, dropped on exit)."""
+    """Both k-center regimes give ONE selection sequence: the driver
+    route (the corpus is under ``_KC_DRIVER_MAX``), and the distributed
+    loop — forced by a bound below the corpus size — with a lineage cut
+    every 3 selections and with none at all (m > k).  The distributed
+    loop's superseded scratch snapshots are gone when it returns
+    (one-deep scratch, dropped on exit)."""
     import os as _os
 
     from xmlstreamprocessor_spark.operators import similarity as sim
 
+    def seq():
+        return [tuple(r) for r in sim.sample_kcenter_coreset(
+            spark, oracle_sf_dir, k=10
+        ).collect()]
+
+    driver = seq()
+    monkeypatch.setattr(sim, "_KC_DRIVER_MAX", 1)
     monkeypatch.setattr(sim, "_KC_MAT_EVERY", 3)
-    cut = [tuple(r) for r in sim.sample_kcenter_coreset(
-        spark, oracle_sf_dir, k=10
-    ).collect()]
+    cut = seq()
     monkeypatch.setattr(sim, "_KC_MAT_EVERY", 10_000)
-    plain = [tuple(r) for r in sim.sample_kcenter_coreset(
-        spark, oracle_sf_dir, k=10
-    ).collect()]
-    assert cut == plain and len(cut) == 10
+    plain = seq()
+    assert driver == cut == plain and len(cut) == 10
     # scratch hygiene: the shared result-scratch root holds no leftover
     # k-center snapshot dirs (root may not exist if nothing else wrote)
     from xmlstreamprocessor_spark.operators import dedup as dd
 
+    monkeypatch.setattr(sim, "_KC_MAT_EVERY", 3)
     root = dd._RESULT_SCRATCH and dd._local_path(dd._RESULT_SCRATCH)
     if root and _os.path.isdir(root):
         # every surviving subdir must belong to some OTHER operator's
         # live artifact; the k-center loop drops its own on exit, so
-        # running it twice must not have grown the dir count
+        # running it again must not have grown the dir count
         before = len(_os.listdir(root))
         sim.sample_kcenter_coreset(spark, oracle_sf_dir, k=10)
         assert len(_os.listdir(root)) == before
