@@ -46,6 +46,7 @@ from xmlstreamprocessor_spark.functions.vectors import (
     duck_cosine6,
 )
 from xmlstreamprocessor_spark.operators.registry import audit_frame, query, t
+from xmlstreamprocessor_spark.session import local_frame
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -564,7 +565,7 @@ def _jaccard_pairs_auto(spark, sf_dir, threshold: float, docs=None,
         )
         if memo_key in _PAIRS_MEMO:
             rows, schema = _PAIRS_MEMO[memo_key]
-            return spark.createDataFrame(rows, schema=schema)
+            return local_frame(spark, rows, schema)
     d = docs if docs is not None else t(spark, sf_dir, "documents")
     sh = d.select("doc_id", shingles("text").alias("s")).withColumn(
         "n", F.size("s")
@@ -659,7 +660,7 @@ def _jaccard_pairs_auto(spark, sf_dir, threshold: float, docs=None,
                     while len(_PAIRS_MEMO) >= _PAIRS_MEMO_MAX:
                         _PAIRS_MEMO.pop(next(iter(_PAIRS_MEMO)))
                     _PAIRS_MEMO[memo_key] = (head, pairs.schema)
-                return spark.createDataFrame(head, schema=pairs.schema)
+                return local_frame(spark, head, pairs.schema)
             return pairs.localCheckpoint(eager=True)
         finally:
             # always release the disk block — a raise from collect() or
@@ -1029,7 +1030,8 @@ def dedup_lsh_plan(spark, sf_dir):
     # 24-row literal grid built driver-side: one partition, no join node
     # at all (a crossJoin of the two literal frames would plan as a
     # CartesianProduct and trip the zero-cartesians plan gate)
-    grid = spark.createDataFrame(
+    grid = local_frame(
+        spark,
         [
             (b, _N_HASHES // b, j)
             for b in (1, 2, 4, 5, 10, 20)

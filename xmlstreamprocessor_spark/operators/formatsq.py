@@ -27,6 +27,7 @@ from xmlstreamprocessor_spark.operators.registry import (
     t,
 )
 from xmlstreamprocessor_spark.sources import formats
+from xmlstreamprocessor_spark.session import local_frame
 
 
 def _checksum(df, fmt: str):
@@ -87,7 +88,7 @@ def formats_roundtrip_orders(spark, sf_dir):
         # the REAL plan (4-format scans -> checksum aggregates -> union);
         # the returned frame is a rebuilt 4-row local relation
         audit_frame(out)
-        return spark.createDataFrame(out.collect(), schema=out.schema)
+        return local_frame(spark, out.collect(), out.schema)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -148,7 +149,7 @@ def formats_partition_pruned_read(spark, sf_dir):
             audit_frame(
                 out, files_total=len(allf), files_pruned_scan=len(pruned)
             )
-        return spark.createDataFrame(out.collect(), schema=out.schema)
+        return local_frame(spark, out.collect(), out.schema)
     finally:
         shutil.rmtree(base, ignore_errors=True)
 
@@ -202,7 +203,7 @@ def formats_bucketed_join_no_shuffle(spark, sf_dir):
         )
         # the REAL plan: the no-exchange-on-join-keys co-bucketed SMJ
         audit_frame(out)
-        return spark.createDataFrame(out.collect(), schema=out.schema)
+        return local_frame(spark, out.collect(), out.schema)
     finally:
         for tbl in (t_o, t_l):
             spark.sql(f"DROP TABLE IF EXISTS {tbl}")

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from xmlstreamprocessor_spark.functions.text import duck_shingles
 from xmlstreamprocessor_spark.operators.registry import query, t
+from xmlstreamprocessor_spark.session import local_frame
 
 
 def _symmetrize(e: DataFrame) -> DataFrame:
@@ -154,13 +155,7 @@ def connected_components(
         spark = edges.sparkSession
         comps = _local_union_find(e.collect(), "src", "dst")
         node_t = dict(e.dtypes)["src"]
-        if not comps:
-            return spark.createDataFrame(
-                [], f"node {node_t}, component {node_t}"
-            )
-        return spark.createDataFrame(
-            comps, f"node {node_t}, component {node_t}"
-        )
+        return local_frame(spark, comps, f"node {node_t}, component {node_t}")
     prev_sig = None
     converged = False
     for _ in range(max_iter):

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from xmlstreamprocessor_spark.operators.registry import query, t
+from xmlstreamprocessor_spark.session import local_frame
 
 # 28-bit uniform hash of the doc key, 0..999 rate domain — Spark and DuckDB
 # spellings of the SAME arithmetic
@@ -615,7 +616,8 @@ def dsir_fit_weights(spark, docs):
         fe.unpersist()
     t_tot = sum(r["ct"] for r in counts)
     r_tot = sum(r["cr"] for r in counts)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r["b"], r["ct"], r["cr"]) for r in counts],
         "b bigint, ct bigint, cr bigint",
     ).select(

@@ -28,6 +28,7 @@ from xmlstreamprocessor_spark.operators.dedup import (
     scratch_path,
 )
 from xmlstreamprocessor_spark.operators.registry import query, t
+from xmlstreamprocessor_spark.session import local_frame
 
 _N_QUERIES = 10  # vec_id < 10 are the query vectors
 _TOP_K = 10
@@ -2669,8 +2670,8 @@ def _round6_like_spark(spark, x):
     out[out == 0] = 0.0  # BigDecimal has no -0: round(-1e-9, 6) is +0.0
     if near.any():
         idx = np.flatnonzero(near)
-        got = spark.createDataFrame(
-            [(int(i), float(x[i])) for i in idx], "i bigint, x double"
+        got = local_frame(
+            spark, [(int(i), float(x[i])) for i in idx], "i bigint, x double"
         ).select("i", F.round("x", 6)).collect()
         for i, v in got:
             out[i] = v
@@ -2923,8 +2924,8 @@ def sample_kcenter_coreset(spark, sf_dir, k: int = _KC_K, iter_hook=None):
         if iter_hook is not None:  # in-memory selections: one call each
             for rank in range(1, len(picks) + 1):
                 iter_hook(rank)
-    return spark.createDataFrame(
-        picks, "sel_rank bigint, vec_id bigint, gap double"
+    return local_frame(
+        spark, picks, "sel_rank bigint, vec_id bigint, gap double"
     ).orderBy("sel_rank")
 
 
@@ -3062,12 +3063,14 @@ def dedup_semantic_prune(spark, sf_dir, k: int = _KC_K,
     else:
         _, clusters, dim = solved
         assign = e.join(
-            spark.createDataFrame(clusters, "vec_id bigint, cluster bigint"),
+            local_frame(spark, clusters, "vec_id bigint, cluster bigint"),
             "vec_id",
         ) if clusters else None
     if assign is None:  # empty corpus -> empty report, never a throw
-        return spark.createDataFrame(
-            [], "doc_id bigint, cluster bigint, kept boolean, pruned_by bigint"
+        return local_frame(
+            spark,
+            [],
+            "doc_id bigint, cluster bigint, kept boolean, pruned_by bigint",
         )
     q = t(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "n_chars"
@@ -3315,7 +3318,7 @@ def dedup_semantic_prune_kmeans(spark, sf_dir, k: int = _SEM_KM_K,
     )
     seeds = e.orderBy("vec_id").limit(k).collect()  # bounded: k rows
     if not seeds:  # empty corpus -> empty report, never a throw
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     with scoped_huge_method_limit(spark):
         return _semantic_kmeans_body(
             spark, sf_dir, e, seeds, k, n_iter, threshold, materialize
@@ -3336,7 +3339,7 @@ def _semantic_kmeans_body(spark, sf_dir, e, seeds, k, n_iter, threshold,
 
     def _assign(cents):
         cdf = F.broadcast(
-            spark.createDataFrame(cents, "cell bigint, ce array<double>")
+            local_frame(spark, cents, "cell bigint, ce array<double>")
             .select("cell", "ce", norm(F.col("ce")).alias("cnrm"))
         )
         sim = F.when(

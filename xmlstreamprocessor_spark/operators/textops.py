@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from xmlstreamprocessor_spark.functions.text import duck_grams, duck_shingles
 from xmlstreamprocessor_spark.operators.registry import query, t
+from xmlstreamprocessor_spark.session import local_frame
 
 # stopword marker sets for the language-ID heuristic (deterministic; the
 # point is the operator shape, not linguistic accuracy)
@@ -1578,13 +1579,14 @@ def bpe_train(
                 # simply the rank sequence after the loop completes)
                 for m in m_rows:
                     iter_hook(m[0])
-            out = spark.createDataFrame(
+            out = local_frame(
+                spark,
                 m_rows,
                 "merge_rank int, left_sym string, right_sym string,"
                 " merged string, weighted_count bigint",
             ).orderBy("merge_rank")
-            return out, spark.createDataFrame(
-                final_rows, "freq bigint, seg string"
+            return out, local_frame(
+                spark, final_rows, "freq bigint, seg string"
             )
 
     def _mat(df):
@@ -1795,7 +1797,8 @@ def bpe_train(
         wf_layers = [(*_compact(wf_layers, _wf_view()), len(applied))]
     for _f, p in cnt_layers:  # counts are not part of the result
         drop_scratch(p)
-    out = spark.createDataFrame(
+    out = local_frame(
+        spark,
         merges,
         "merge_rank int, left_sym string, right_sym string,"
         " merged string, weighted_count bigint",

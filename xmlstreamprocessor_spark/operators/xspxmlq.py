@@ -42,6 +42,7 @@ from xmlstreamprocessor_spark.operators.registry import (
     t,
 )
 from xmlstreamprocessor_spark.sources.datasource import register_xml_source
+from xmlstreamprocessor_spark.session import local_frame
 
 
 def _warehouse_scratch(spark, prefix: str) -> str:
@@ -235,6 +236,6 @@ def xspxml_partition_pruned_read(spark, sf_dir):
             audit_frame(
                 res, files_total=len(allf), files_pruned_scan=len(pruned)
             )
-        return spark.createDataFrame(res.collect(), schema=res.schema)
+        return local_frame(spark, res.collect(), res.schema)
     finally:
         shutil.rmtree(base, ignore_errors=True)

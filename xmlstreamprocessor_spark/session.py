@@ -3,9 +3,11 @@
 Local testing runs on ``local[N]``; the configuration is chosen so the same
 plans survive a 1000-executor cluster: AQE on (runtime re-planning, skew-join
 splitting, partition coalescing), broadcast threshold high enough to broadcast
-TPC-H dimension tables, Arrow enabled for every Python<->JVM hop, and a UTC
-session timezone so timestamp semantics are engine-independent (matches the
-DuckDB oracle, which reads parquet timestamps as naive/UTC).
+TPC-H dimension tables, Arrow for every Python<->JVM hop (driver-side
+results go back to Spark as Arrow ``LocalRelation``s through
+:func:`local_frame`), and a UTC session timezone so timestamp semantics are
+engine-independent (matches the DuckDB oracle, which reads parquet
+timestamps as naive/UTC).
 """
 
 from __future__ import annotations
@@ -13,7 +15,8 @@ from __future__ import annotations
 import contextlib
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 
 def _default_driver_memory() -> str:
@@ -40,6 +43,7 @@ def get_session(
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or f"local[{cpus}]"
+    memory = os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory())
     shuffle_partitions = shuffle_partitions or int(cpus)
     builder = (
         SparkSession.builder.appName(app_name)
@@ -69,9 +73,18 @@ def get_session(
         # count the same way.  The default adapts to the host (capped at
         # 16g, never more than half of physical RAM) so small machines
         # still boot; SPARK_DRIVER_MEMORY overrides.
+        .config("spark.driver.memory", memory)
+        # the driver JVM starts at its full heap with a fixed young
+        # generation (1/8 of it).  Left to itself, G1 grows the heap when
+        # a burst of short pauses lifts its GC-time ratio (on-heap
+        # tungsten pages are humongous objects), and every growth moves
+        # eden onto pages never touched before: the resident size then
+        # depended on when the bursts fell, by up to 0.5 GB between
+        # identical runs at 2g.  Committed heap that is never touched is
+        # not resident.  defaultJavaOptions rather than extraJavaOptions,
+        # so a --driver-java-options on the command line does not drop it.
         .config(
-            "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEMORY", _default_driver_memory()),
+            "spark.driver.defaultJavaOptions", f"-Xms{memory} -XX:NewRatio=7"
         )
         .config("spark.ui.enabled", "false")
     )
@@ -198,3 +211,34 @@ def local_os_path(path: str) -> str | None:
     if "://" in path:
         return None
     return path if _default_fs_is_local() else None
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: str | StructType
+) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` (tuples or ``Row``s, read by
+    position), typed by ``schema`` (a DDL string or a ``StructType``).
+    The one way driver results go back to Spark.
+
+    The rows reach the JVM as one Arrow table and plan as a
+    ``LocalRelation``, so scanning the frame starts no Python worker,
+    whatever ``spark.sql.execution.arrow.pyspark.enabled`` says.  A plain
+    ``createDataFrame(<list>)`` builds a pickled Python RDD instead, and
+    every stage that scans it runs Python-worker tasks.  Values go through
+    the schema's own ``toInternal``, as on the list path, so the frame is
+    the same: a naive datetime, for one, is read in the driver's local
+    zone on both."""
+    import pyarrow as pa  # lazily: keeps it off session start-up
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*map(schema.toInternal, rows))) or [()] * len(
+        schema.fields
+    )
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema=schema)

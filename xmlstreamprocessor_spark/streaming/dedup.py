@@ -15,6 +15,8 @@ import os
 
 from pyspark.sql import DataFrame, functions as F
 
+from xmlstreamprocessor_spark.session import local_frame
+
 
 def dedup_within_watermark(
     events: DataFrame,
@@ -188,7 +190,7 @@ def _read_lt(spark, base, schema, batch_id):
     typed frame if none.  Shared by both foreachBatch faces (hoisted
     from two identical nested copies — code-review r13)."""
     if not _list_batch_ids(spark, base):
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     df = spark.read.option("basePath", base).parquet(base)
     return df.filter(F.col("batch_id") < batch_id).drop("batch_id")
 
@@ -231,7 +233,7 @@ def _df_base(spark, df_dir, compact_dir, batch_id):
             )
         )
     if not parts:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -352,9 +354,7 @@ def pair_graph_foreach_batch(
                 os.path.join(comp_dir, f"batch_id={max(prev_ids)}")
             )
         else:
-            base_comp = spark.createDataFrame(
-                [], "node bigint, component bigint"
-            )
+            base_comp = local_frame(spark, [], "node bigint, component bigint")
         merged = merge_components(
             base_comp, delta_pairs, src="doc_a", dst="doc_b"
         )
@@ -391,10 +391,10 @@ def pair_graph_state(spark, state_dir: str):
     comp_ids = _list_batch_ids(spark, comp_dir)
     if not comp_ids:
         return (
-            spark.createDataFrame(
-                [], "doc_a bigint, doc_b bigint, jaccard double"
+            local_frame(
+                spark, [], "doc_a bigint, doc_b bigint, jaccard double"
             ),
-            spark.createDataFrame([], "node bigint, component bigint"),
+            local_frame(spark, [], "node bigint, component bigint"),
         )
     pairs = (
         spark.read.option("basePath", pair_dir).parquet(pair_dir)
@@ -567,9 +567,7 @@ def containment_foreach_batch(
                 os.path.join(comp_dir, f"batch_id={max(prev_ids)}")
             )
         else:
-            base_comp = spark.createDataFrame(
-                [], "node bigint, component bigint"
-            )
+            base_comp = local_frame(spark, [], "node bigint, component bigint")
         merged = merge_components(
             base_comp, delta_pairs, src="contained_id", dst="container_id"
         )
@@ -598,10 +596,12 @@ def containment_state(spark, state_dir: str, table: str | None = None):
     comp_dir = state_dir.rstrip("/") + "/components"
     comp_ids = _list_batch_ids(spark, comp_dir)
     if not comp_ids:
-        pairs = spark.createDataFrame(
-            [], "contained_id bigint, container_id bigint, containment double"
+        pairs = local_frame(
+            spark,
+            [],
+            "contained_id bigint, container_id bigint, containment double",
         )
-        comp = spark.createDataFrame([], "node bigint, component bigint")
+        comp = local_frame(spark, [], "node bigint, component bigint")
     else:
         pairs = (
             spark.read.option("basePath", cpair_dir).parquet(cpair_dir)
